@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Builds the standing 10× scale fixture: every table except the
@@ -40,13 +39,7 @@ object Fixture10x {
 
   def main(args: Array[String]): Unit = {
     val (src, out) = (args(0), args(1))
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.session()
     for (t <- asIs)
       Tables(spark, src, t).write.mode("overwrite")
         .parquet(s"$out/$t.parquet")

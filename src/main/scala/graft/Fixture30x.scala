@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Builds the DISTINCT-KEY, DISTINCT-CONTENT ~30× scale fixture for
@@ -28,13 +27,7 @@ object Fixture30x {
   def main(args: Array[String]): Unit = {
     val (src, out) = (args(0), args(1))
     val copies = if (args.length > 2) args(2).toInt else 30
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")}]")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.session()
     for (t <- Fixture10x.asIs)
       Tables(spark, src, t).write.mode("overwrite")
         .parquet(s"$out/$t.parquet")

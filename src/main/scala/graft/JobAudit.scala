@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.GraftColumnBridge
 
 /** Diagnostic main: counts Spark JOBS per registry key, first-pass
   * (fixture-build-inclusive) vs steady (rerun after the memo is
@@ -15,21 +15,16 @@ import org.apache.spark.sql.SparkSession
   * Prints one line per key: first-pass jobs, steady jobs, wall secs,
   * and the DerivedCache build count delta (which keys paid a shared
   * fixture). Keys run in Bench's seeded order so fixture attribution
-  * matches the official record.
+  * matches the official record. The TOTAL line's `buildJobs` (first
+  * minus steady) is the one-time fixture cost; `JobAudit <sfDir>
+  * q_index` gives it for the two maintained-index fixtures
+  * (IndexQueries.docFixture / vecFixture).
   */
 object JobAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
     val prefixes = args.drop(1)
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.session()
     val jobs = new java.util.concurrent.atomic.AtomicLong(0)
     spark.sparkContext.addSparkListener(new SparkListener {
       override def onJobStart(j: SparkListenerJobStart): Unit =
@@ -44,10 +39,13 @@ object JobAudit {
     var totalFirst = 0L; var totalSteady = 0L
     for (name <- order) {
       def once(): (Long, Double) = {
+        GraftColumnBridge.drainListenerBus(spark.sparkContext)
         val j0 = jobs.get(); val t0 = System.nanoTime()
         SparkEntry.queries(name)(spark, sfDir)
           .write.format("noop").mode("overwrite").save()
-        (jobs.get() - j0, (System.nanoTime() - t0) / 1e9)
+        val sec = (System.nanoTime() - t0) / 1e9
+        GraftColumnBridge.drainListenerBus(spark.sparkContext)
+        (jobs.get() - j0, sec)
       }
       val b0 = graft.operators.DerivedCache.buildCount.get()
       val (j1, s1) = once()

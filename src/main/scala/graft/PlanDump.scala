@@ -3,8 +3,6 @@ package graft
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Diagnostic main: dumps `.explain("formatted")` for the named
   * registry keys to one file each — the before/after plan evidence an
   * optimization round commits under `plans/r<N>/`.
@@ -20,15 +18,7 @@ object PlanDump {
     val keys = args(3).split(",").map(_.trim).filter(_.nonEmpty)
     val unknown = keys.filterNot(SparkEntry.queries.contains)
     require(unknown.isEmpty, s"unknown keys: ${unknown.mkString(", ")}")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.session()
     Files.createDirectories(Paths.get(outDir))
     for (k <- keys) {
       val df = SparkEntry.queries(k)(spark, sfDir)

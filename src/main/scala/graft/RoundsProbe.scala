@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.{ApproxDedup, ConnectedComponents}
 
@@ -25,15 +25,7 @@ object RoundsProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0)
       else sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.session()
     val docs = Tables.documents(spark, sfDir).select("doc_id", "text")
     val basePairs = ApproxDedup.ngramJaccardPairs(
       docs, n = 2, maxId = 300, threshold = 0.10)

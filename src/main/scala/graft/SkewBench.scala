@@ -3,7 +3,7 @@ package graft
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Skewed-fixture proof for the salted-join operator: a Zipf-like
@@ -34,25 +34,19 @@ import org.apache.spark.sql.functions._
 object SkewBench {
   def main(args: Array[String]): Unit = {
     val out = if (args.nonEmpty) args(0) else "/tmp/skew_bench.json"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      // coalescing merges sub-advisory-size reducers — a small-bytes
-      // artifact that would blind the max-reducer-rows metric (at
-      // 100 TB these partitions exceed the advisory size and stay
-      // split); skew-join splitting stays ON
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
-      // the dim is 100k rows — broadcastable here, NOT at 100 TB;
-      // disabling broadcast makes the local run exercise the same
-      // shuffle join the full-scale job would
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.session()
+    val cpus = spark.sparkContext.defaultParallelism
+    spark.conf.set("spark.sql.adaptive.enabled", "true")
+    spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
+    // coalescing merges sub-advisory-size reducers — a small-bytes
+    // artifact that would blind the max-reducer-rows metric (at
+    // 100 TB these partitions exceed the advisory size and stay
+    // split); skew-join splitting stays ON
+    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+    // the dim is 100k rows — broadcastable here, NOT at 100 TB;
+    // disabling broadcast makes the local run exercise the same
+    // shuffle join the full-scale job would
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     import spark.implicits._
 
     val nRows = sys.env.getOrElse("SKEW_ROWS", "60000000").toLong
@@ -81,7 +75,7 @@ object SkewBench {
     def plain = large.join(small, "key")
       .select(col("key"), col("v") + col("w"))
     def salted = graft.operators.ScaleJoins
-      .saltedJoin(large, small, "key", salts = cpus.toInt)
+      .saltedJoin(large, small, "key", salts = cpus)
       .select(col("key"), col("v") + col("w"))
     // result equality first (the ScaleJoinsSpec contract, re-proven
     // on the pathological fixture): same row multiset

@@ -1,12 +1,7 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = SparkEntry.session()
     val n = SparkEntry.entry(spark).count()
     println(s"SMOKE entry rows=$n")
     spark.stop()

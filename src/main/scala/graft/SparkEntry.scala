@@ -8,6 +8,34 @@ import graft.queries._
   * rules that make every oracle pair hash-match DuckDB.
   */
 object SparkEntry {
+  /** The one session every main and spec starts from: `local[cores]`
+    * with [[graft.functions.GraftExtensions]] installed, one shuffle
+    * partition per core, UTC session time (the events.ts
+    * normalization in [[Tables]] requires it), nanosecond parquet
+    * timestamps read as longs, no UI and WARN logging. `cores`
+    * defaults to `SPARK_GRAFT_CPUS`, else 4. Callers that need extra
+    * runtime confs set them with `spark.conf.set` afterwards. */
+  def session(cores: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
+      : SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cores]")
+      .withExtensions(new graft.functions.GraftExtensions)
+      .config("spark.sql.shuffle.partitions", cores.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  /** A fresh directory under `java.io.tmpdir` whose name starts with
+    * `prefix` — where fixtures write the tables they build. */
+  def tempDir(prefix: String): String =
+    java.nio.file.Files.createTempDirectory(
+      java.nio.file.Paths.get(System.getProperty("java.io.tmpdir")), prefix)
+      .toString
+
   /** Flagship query: the reference's entire ingest dataflow (R6–R13)
     * as one declarative plan — gunzip-until-plain, DATA_MESSAGE
     * split, from_json, explode, lineage/prefix enrichment, batch ids

@@ -32,7 +32,7 @@ object Tables {
       // event time by its zone offset (ADVICE r6).
       require(spark.conf.get("spark.sql.session.timeZone") == "UTC",
         "events.ts normalization requires spark.sql.session.timeZone" +
-          "=UTC — set it in the SparkSession builder")
+          "=UTC — start the session with SparkEntry.session")
       df.withColumn("ts",
         unix_micros(col("ts").cast("timestamp")) * lit(1000L))
     } else df

@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 import graft.sources.TxTable
 
 /** Micro-bench for TxTable metadata resolution at streaming commit
@@ -19,15 +17,9 @@ import graft.sources.TxTable
 object TxMetaBench {
   def main(args: Array[String]): Unit = {
     val n = if (args.nonEmpty) args(0).toInt else 2000
-    val spark = SparkSession.builder()
-      .appName("graft-txmeta-bench").master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = SparkEntry.session()
     import spark.implicits._
-    spark.sparkContext.setLogLevel("ERROR")
-    val dir = Files.createTempDirectory(
-      Paths.get(System.getProperty("java.io.tmpdir")), "txmeta_").toString
+    val dir = SparkEntry.tempDir("txmeta_")
     require(TxTable.create(Seq((0L, "t0")).toDF("doc_id", "text"),
       dir, buckets = 1))
     // n streaming-shaped commits through the public protocol (empty

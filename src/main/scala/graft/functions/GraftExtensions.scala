@@ -6,16 +6,10 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** SQL-surface registration for the engine's native expressions, so
   * `spark.sql("SELECT simhash64(...)")` works alongside the Column
-  * API. Install either at session build time:
-  *
-  * {{{
-  *   SparkSession.builder()
-  *     .withExtensions(new GraftExtensions)           // or
-  *     .config("spark.sql.extensions",
-  *             "graft.functions.GraftExtensions")
-  * }}}
-  *
-  * or on a live session via [[GraftExtensions.registerFunctions]].
+  * API. Install either at session build time — `withExtensions(new
+  * GraftExtensions)`, as [[graft.SparkEntry.session]] does, or the
+  * conf `spark.sql.extensions=graft.functions.GraftExtensions` — or
+  * on a live session via [[GraftExtensions.registerFunctions]].
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {

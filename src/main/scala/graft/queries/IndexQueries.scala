@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.SparkEntry.tempDir
 import graft.Tables
 import graft.operators.{AnnSearch, ApproxDedup, Bm25, IncrementalIndex}
 import graft.sources.TxTable
@@ -42,10 +43,6 @@ import graft.sources.TxTable
   * derived retrieval state.
   */
 object IndexQueries {
-
-  private def tmp(p: String) = java.nio.file.Files.createTempDirectory(
-    java.nio.file.Paths.get(System.getProperty("java.io.tmpdir")), p)
-    .toString
 
   /** |maintained △ rebuilt| as a multiset — `exceptAll(a,b).count +
     * exceptAll(b,a).count`, computed as ONE signed-count aggregation
@@ -87,8 +84,9 @@ object IndexQueries {
     * read final state only — the chunked REFRESH cadence). */
   private def docFixture(s: SparkSession, d: String): DocIndexes =
     graft.operators.DerivedCache.memoValue(s, s"index_doc_fixture:$d") {
-      val (corpus, bm25, simhash, minhash) = (tmp("graft_idxcorp_"),
-        tmp("graft_idxpost_"), tmp("graft_idxsh_"), tmp("graft_idxmh_"))
+      val (corpus, bm25, simhash, minhash) = (tempDir("graft_idxcorp_"),
+        tempDir("graft_idxpost_"), tempDir("graft_idxsh_"),
+        tempDir("graft_idxmh_"))
       val docs = Tables.documents(s, d).select("doc_id", "lang", "text")
       require(TxTable.create(
         docs.filter(col("doc_id") % 3 === 0), corpus), "create lost CAS")
@@ -167,9 +165,9 @@ object IndexQueries {
     * codes maintained per transition off one shared feed. */
   private def vecFixture(s: SparkSession, d: String): VecIndexes =
     graft.operators.DerivedCache.memoValue(s, s"index_vec_fixture:$d") {
-      val (corpus, ivf, pq) =
-        (tmp("graft_ivfcorp_"), tmp("graft_ivfasgn_"), tmp("graft_pqcode_"))
-      val (cents, books) = (tmp("graft_ivfcent_"), tmp("graft_pqbook_"))
+      val (corpus, ivf, pq) = (tempDir("graft_ivfcorp_"),
+        tempDir("graft_ivfasgn_"), tempDir("graft_pqcode_"))
+      val (cents, books) = (tempDir("graft_ivfcent_"), tempDir("graft_pqbook_"))
       val e = Tables.embeddings(s, d).filter(col("vec_id") < 300)
         .select("vec_id", "embedding")
       require(TxTable.create(e.filter(col("vec_id") % 3 === 0), corpus,
@@ -243,7 +241,7 @@ object IndexQueries {
   private def sqlIndexFixture(s: SparkSession, d: String)
       : (String, Seq[(String, Long)], Long) =
     graft.operators.DerivedCache.memoValue(s, s"index_sql_fixture:$d") {
-      val (corpus, idx) = (tmp("graft_sqlcorp_"), tmp("graft_sqlidx_"))
+      val (corpus, idx) = (tempDir("graft_sqlcorp_"), tempDir("graft_sqlidx_"))
       Tables.documents(s, d).select("doc_id", "text")
         .filter(col("doc_id") < 400)
         .createOrReplaceTempView("graft_sql_lc_docs")
@@ -270,7 +268,7 @@ object IndexQueries {
       // discovery + retirement: a sibling SIMHASH index (metadata-
       // only birth) appears in SHOW INDEXES, then DROP removes both
       // the registration and the directory tree
-      val idx2 = tmp("graft_sqlidx2_")
+      val idx2 = tempDir("graft_sqlidx2_")
       s.sql(s"CREATE INDEX tx.`$idx2` ON tx.`$corpus` USING SIMHASH")
       val shownTwo = s.sql(s"SHOW INDEXES ON tx.`$corpus`").count()
       val dropped = s.sql(s"DROP INDEX tx.`$idx2`").head.getLong(0)
@@ -284,7 +282,7 @@ object IndexQueries {
       // `REFRESH ... NETTED`: one index commit for two source
       // versions, idempotent on re-issue, postings identical to the
       // per-version-refreshed sibling (per-row decomposability nets)
-      val idx3 = tmp("graft_sqlidx3_")
+      val idx3 = tempDir("graft_sqlidx3_")
       s.sql(s"CREATE INDEX tx.`$idx3` ON tx.`$corpus` USING BM25")
       s.sql(s"REFRESH INDEX tx.`$idx3` ON tx.`$corpus` TO VERSION 2")
       val birth3 = TxTable.latestVersion(idx3).get

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{SparkEntry, Tables}
 import graft.multimodal.MultimodalOps
 import graft.operators.{AnnSearch, ApproxDedup, Bpe, TextAnalysis}
 
@@ -96,11 +96,8 @@ object LlmQueries {
   private def ivfPqServing(s: SparkSession, d: String): (String, String) =
     graft.operators.DerivedCache.memoValue(
       s, s"ann_ivfpq_serving:maxId=200:$d") {
-      def tmp(p: String) = java.nio.file.Files.createTempDirectory(
-        java.nio.file.Paths.get(System.getProperty("java.io.tmpdir")), p)
-        .toString
-      val (corpus, index) = (tmp("graft_pqserve_corp_"),
-        tmp("graft_pqserve_code_"))
+      val (corpus, index) = (SparkEntry.tempDir("graft_pqserve_corp_"),
+        SparkEntry.tempDir("graft_pqserve_code_"))
       val e = Tables.embeddings(s, d).filter(col("vec_id") < 200)
         .select("vec_id", "label", "embedding")
       require(graft.sources.TxTable.create(e, corpus,

@@ -4,6 +4,7 @@ import java.io.File
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.SparkEntry
 import graft.firehose.{FirehoseDecoder, FirehoseFixture}
 
 /** The reference pipeline (R6–R13) replayed as one batch query:
@@ -109,14 +110,12 @@ object PipelineQueries {
     * behind. */
   private def streamingPipelineTable(s: SparkSession): String =
     graft.operators.DerivedCache.memoValue(s, "pipeline_streaming_table") {
-      def tmp(p: String) = java.nio.file.Files.createTempDirectory(
-        java.nio.file.Paths.get(System.getProperty("java.io.tmpdir")), p)
-      val staging = tmp("graft_stream_staging_")
-      graft.firehose.FirehoseFixture.writeStreaming(staging.toFile)
-      val table = tmp("graft_stream_table_").toString
-      val ckpt = tmp("graft_stream_ckpt_").toString
+      val staging = SparkEntry.tempDir("graft_stream_staging_")
+      graft.firehose.FirehoseFixture.writeStreaming(new File(staging))
+      val table = SparkEntry.tempDir("graft_stream_table_")
+      val ckpt = SparkEntry.tempDir("graft_stream_ckpt_")
       val q = graft.streaming.StreamingCorpusPipeline.start(
-        s, staging.toString, table, ckpt, appId = "pipeline_streaming")
+        s, staging, table, ckpt, appId = "pipeline_streaming")
       q.awaitTermination()
       val v = graft.sources.TxTable.latestVersion(table)
       require(v.contains(5L),

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{SparkEntry, Tables}
 import graft.sources.TxTable
 
 /** Transactional-table queries: the snapshot-isolated commit log
@@ -33,9 +33,7 @@ object TxQueries {
     * shared index. */
   private def fixtureTable(s: SparkSession, d: String): String =
     graft.operators.DerivedCache.memoValue(s, s"tx_table_fixture:$d") {
-      val dir = java.nio.file.Files.createTempDirectory(
-        java.nio.file.Paths.get(System.getProperty("java.io.tmpdir")),
-        "graft_txtable_").toString
+      val dir = SparkEntry.tempDir("graft_txtable_")
       val docs = Tables.documents(s, d).select("doc_id", "lang", "text")
       require(TxTable.create(
         docs.filter(col("doc_id") % 3 === 0), dir), "create lost its CAS")
@@ -61,9 +59,7 @@ object TxQueries {
     * double sums are order-independent and DuckDB-replayable. */
   private def evoTable(s: SparkSession, d: String): String =
     graft.operators.DerivedCache.memoValue(s, s"tx_evo_fixture:$d") {
-      val dir = java.nio.file.Files.createTempDirectory(
-        java.nio.file.Paths.get(System.getProperty("java.io.tmpdir")),
-        "graft_txevo_").toString
+      val dir = SparkEntry.tempDir("graft_txevo_")
       val docs = Tables.documents(s, d)
         .select(col("doc_id"), col("lang"), col("text"), col("n_chars"))
       require(TxTable.create(
@@ -90,9 +86,7 @@ object TxQueries {
     * q_corpus_delete_feed (change-feed replay). */
   private def delTable(s: SparkSession, d: String): String =
     graft.operators.DerivedCache.memoValue(s, s"tx_del_fixture:$d") {
-      val dir = java.nio.file.Files.createTempDirectory(
-        java.nio.file.Paths.get(System.getProperty("java.io.tmpdir")),
-        "graft_txdel_").toString
+      val dir = SparkEntry.tempDir("graft_txdel_")
       val docs = Tables.documents(s, d).select("doc_id", "lang", "text")
       require(TxTable.create(
         docs.filter(col("doc_id") % 3 === 0), dir), "create lost its CAS")
@@ -118,9 +112,7 @@ object TxQueries {
     * versions) are require-checked at build time. */
   private def sqlTable(s: SparkSession, d: String): String =
     graft.operators.DerivedCache.memoValue(s, s"tx_sql_fixture:$d") {
-      val dir = java.nio.file.Files.createTempDirectory(
-        java.nio.file.Paths.get(System.getProperty("java.io.tmpdir")),
-        "graft_txsql_").toString
+      val dir = SparkEntry.tempDir("graft_txsql_")
       val docs = Tables.documents(s, d).select("doc_id", "lang", "text")
       require(TxTable.create(
         docs.filter(col("doc_id") % 3 === 0), dir), "create lost its CAS")
@@ -145,9 +137,7 @@ object TxQueries {
     * unambiguous. */
   private def dmlTable(s: SparkSession, d: String): String =
     graft.operators.DerivedCache.memoValue(s, s"tx_dml_fixture:$d") {
-      val dir = java.nio.file.Files.createTempDirectory(
-        java.nio.file.Paths.get(System.getProperty("java.io.tmpdir")),
-        "graft_txdml_").toString
+      val dir = SparkEntry.tempDir("graft_txdml_")
       val docs = Tables.documents(s, d).select("doc_id", "lang", "text")
       docs.createOrReplaceTempView("graft_dml_docs")
       require(TxTable.create(
@@ -187,9 +177,7 @@ object TxQueries {
     * so [[TxTable.readKeyRange]] skips files at the MANIFEST level. */
   private def clusterTable(s: SparkSession, d: String): String =
     graft.operators.DerivedCache.memoValue(s, s"tx_cluster_fixture:$d") {
-      val dir = java.nio.file.Files.createTempDirectory(
-        java.nio.file.Paths.get(System.getProperty("java.io.tmpdir")),
-        "graft_txclust_").toString
+      val dir = SparkEntry.tempDir("graft_txclust_")
       val docs = Tables.documents(s, d).select("doc_id", "lang", "text")
       require(TxTable.create(
         docs.filter(col("doc_id") % 3 === 0), dir), "create lost its CAS")
@@ -213,9 +201,7 @@ object TxQueries {
     * once and the pruned reads must match it exactly. */
   private def multiClusterTable(s: SparkSession, d: String): String =
     graft.operators.DerivedCache.memoValue(s, s"tx_mcluster_fixture:$d") {
-      val dir = java.nio.file.Files.createTempDirectory(
-        java.nio.file.Paths.get(System.getProperty("java.io.tmpdir")),
-        "graft_txmclust_").toString
+      val dir = SparkEntry.tempDir("graft_txmclust_")
       val docs = Tables.documents(s, d).select(
         format_string("doc_%06d", col("doc_id")).as("id_str"),
         (col("doc_id") % 32).as("x"),
@@ -271,9 +257,7 @@ object TxQueries {
     * with pure integer arithmetic. */
   private def timeClusterTable(s: SparkSession, d: String): String =
     graft.operators.DerivedCache.memoValue(s, s"tx_tcluster_fixture:$d") {
-      val dir = java.nio.file.Files.createTempDirectory(
-        java.nio.file.Paths.get(System.getProperty("java.io.tmpdir")),
-        "graft_txtclust_").toString
+      val dir = SparkEntry.tempDir("graft_txtclust_")
       val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
         .withColumn("dt", date_add(to_date(lit("2020-01-01")),
           (col("doc_id") % 365).cast("int")))
@@ -308,9 +292,7 @@ object TxQueries {
       : (String, java.lang.Long, java.lang.Long, java.lang.Long,
          java.lang.Long) =
     graft.operators.DerivedCache.memoValue(s, s"tx_vac_fixture:$d") {
-      val dir = java.nio.file.Files.createTempDirectory(
-        java.nio.file.Paths.get(System.getProperty("java.io.tmpdir")),
-        "graft_txvac_").toString
+      val dir = SparkEntry.tempDir("graft_txvac_")
       val docs = Tables.documents(s, d).select("doc_id", "lang", "text")
       require(TxTable.create(
         docs.filter(col("doc_id") % 3 === 0), dir), "create lost its CAS")

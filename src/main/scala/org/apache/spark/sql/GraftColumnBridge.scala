@@ -49,4 +49,11 @@ object GraftColumnBridge {
     * Used by [[graft.Bench]]'s bounded row-count poll. */
   def observedOrEmpty(obs: Observation): Map[String, Any] =
     obs.getOrEmpty
+
+  /** Bridge to the `private[spark]` listener bus: returns once every
+    * event posted so far has reached its listeners, so a listener
+    * counter read right after an action includes that action's jobs.
+    * Used by [[graft.JobAudit]]. */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
 }

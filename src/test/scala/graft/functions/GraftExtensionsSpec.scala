@@ -1,5 +1,9 @@
 package graft.functions
 
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+
 import graft.SparkSpec
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.functions._
@@ -9,6 +13,25 @@ class GraftExtensionsSpec extends SparkSpec {
 
   test("extensions class injects without error (builder-time path)") {
     new GraftExtensions().apply(new SparkSessionExtensions)
+  }
+
+  test("SparkEntry.session is the one session builder in main and " +
+      "installs the extensions at build time") {
+    val root = Paths.get("src/main/scala")
+    val builders = Files.walk(root).iterator.asScala
+      .filter(_.toString.endsWith(".scala"))
+      .map(f => root.relativize(f).toString ->
+        """SparkSession\.builder""".r.findAllIn(Files.readString(f)).size)
+      .filter(_._2 > 0).toMap
+    assert(builders == Map("graft/SparkEntry.scala" -> 1))
+    // a fresh child session sees only build-time extensions, not
+    // functions registered on the live parent
+    assert(spark.newSession()
+      .sql("SELECT simhash64(array(1L, 2L))").head().getLong(0) ==
+      spark.range(1).select(HashExpressions.simhash64(
+        array(lit(1L), lit(2L)))).head().getLong(0))
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == "4")
+    assert(spark.conf.get("spark.sql.session.timeZone") == "UTC")
   }
 
   test("SQL surface matches the Column API for all native functions") {

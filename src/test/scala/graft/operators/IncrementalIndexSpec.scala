@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths}
 
 import graft.SparkSpec
 import graft.sources.TxTable
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, GraftColumnBridge}
 import org.apache.spark.sql.functions._
 
 /** [[IncrementalIndex]]: the maintained BM25 postings / IVF
@@ -83,6 +83,8 @@ class IncrementalIndexSpec extends SparkSpec {
           j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
         jobs.incrementAndGet()
     }
+    // earlier jobs' events must not reach the new listener
+    GraftColumnBridge.drainListenerBus(spark.sparkContext)
     spark.sparkContext.addSparkListener(listener)
     try {
       val vBefore = TxTable.latestVersion(index).get
@@ -91,7 +93,7 @@ class IncrementalIndexSpec extends SparkSpec {
       IncrementalIndex.applyBm25(spark, corpus, index, 3L)
       IncrementalIndex.applyBm25(spark, corpus, index2, 3L,
         feed = Some(TxTable.changes(spark, corpus, 2L, 3L)))
-      Thread.sleep(500) // listener delivery is async
+      GraftColumnBridge.drainListenerBus(spark.sparkContext)
       assert(jobs.get() == 0L,
         s"compaction fold must be metadata-only, ran ${jobs.get()} jobs")
       assert(TxTable.latestVersion(index).contains(vBefore + 1L),
