@@ -46,14 +46,16 @@ object GraftColumnBridge {
   /** Bridge to `private[sql]` Observation.getOrEmpty — the NON-blocking
     * metrics read (returns after its short internal wait instead of
     * parking the caller forever when the listener event was shed).
-    * Used by [[graft.Bench]]'s bounded row-count poll. */
+    * Used by [[graft.Bench]]'s bounded row-count poll and by the
+    * Bloom fold of [[graft.streaming.StreamingCorpusPipeline]]. */
   def observedOrEmpty(obs: Observation): Map[String, Any] =
     obs.getOrEmpty
 
   /** Bridge to the `private[spark]` listener bus: returns once every
     * event posted so far has reached its listeners, so a listener
     * counter read right after an action includes that action's jobs.
-    * Used by [[graft.JobAudit]]. */
+    * Used by [[graft.JobAudit]] and the S26 pipeline's spec-only
+    * residue count. */
   def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
     sc.listenerBus.waitUntilEmpty()
 }

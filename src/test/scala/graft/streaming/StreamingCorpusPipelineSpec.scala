@@ -92,10 +92,61 @@ class StreamingCorpusPipelineSpec extends SparkSpec {
     // rightly-sized filter keeps it at redeliveries + fpp noise
     assert(diag.residueRows.get() <= 17L,
       s"residue exceeded the gated volume: ${diag.residueRows.get()}")
+    // and it holds at least block 10's redelivered copies (3 kept
+    // events): the filter has no false negatives
+    assert(diag.residueRows.get() >= 3L,
+      s"residue lost the redelivered ids: ${diag.residueRows.get()}")
     // the post-run filter is sized from the head manifest's O(1)
     // row count — present for every commit this pipeline wrote
     assert(TxTable.snapshot(table).get.totalRows.contains(
       expected.size.toLong))
+  }
+
+  test("one decode per micro-batch: every staged file is scanned " +
+      "once and a batch runs at most five jobs") {
+    import org.apache.spark.scheduler.{SparkListener,
+      SparkListenerJobStart, SparkListenerStageCompleted}
+    import org.apache.spark.sql.GraftColumnBridge
+    val (staging, table, cp) =
+      (tmp("s26j_stage_"), tmp("s26j_tbl_"), tmp("s26j_cp_"))
+    FirehoseFixture.writeStreaming(new java.io.File(staging))
+    val stagedBytes = new java.io.File(staging).listFiles()
+      .map(_.length()).sum
+    val jobs = new java.util.concurrent.atomic.AtomicLong(0L)
+    val scans = new java.util.concurrent.atomic.AtomicLong(0L)
+    val scannedBytes = new java.util.concurrent.atomic.AtomicLong(0L)
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+      // a stage that runs the source's file scan decodes that
+      // micro-batch's files once
+      override def onStageCompleted(s: SparkListenerStageCompleted)
+          : Unit =
+        if (s.stageInfo.rddInfos.exists(
+            _.scope.exists(_.name.startsWith("Scan binaryFile")))) {
+          scans.incrementAndGet()
+          scannedBytes.addAndGet(
+            s.stageInfo.taskMetrics.inputMetrics.bytesRead)
+        }
+    }
+    // earlier specs' events must not reach the new listener
+    GraftColumnBridge.drainListenerBus(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    val batches = try {
+      val q = StreamingCorpusPipeline.start(
+        spark, staging, table, cp, appId = "s26_jobs_spec")
+      try q.awaitTermination() finally q.stop()
+      GraftColumnBridge.drainListenerBus(spark.sparkContext)
+      q.lastProgress.batchId + 1
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(ids(table) == expected)
+    assert(batches == 4L, "one micro-batch per staged file")
+    assert(scans.get() == batches,
+      s"${scans.get()} source scans for $batches micro-batches")
+    assert(scannedBytes.get() == stagedBytes,
+      s"read ${scannedBytes.get()} source bytes for $stagedBytes staged")
+    assert(jobs.get() <= 5L * batches,
+      s"${jobs.get()} jobs for $batches micro-batches")
   }
 
   test("batch/stream quality-verdict parity: the streaming gate IS " +
@@ -146,11 +197,23 @@ class StreamingCorpusPipelineSpec extends SparkSpec {
     Files.delete(victim)
     Files.deleteIfExists(
       commits.resolve(s".${victim.getFileName.toString}.crc"))
+    // and behind it, in the same restarted run, a file that
+    // redelivers the replayed batch's ids: the replay folds nothing
+    // into the Bloom filter, so only the start-time build from the
+    // table can class them "maybe" and send them to the anti-join
+    val redelivery = Paths.get(staging, "f5.gz.gz")
+    Files.copy(Paths.get(full, "f4.gz.gz"), redelivery)
+    Files.setLastModifiedTime(redelivery, java.nio.file.attribute
+      .FileTime.fromMillis(FirehoseFixture.BaseTs + 40000L))
     val versBefore = TxTable.latestVersion(table).get
     run(staging, table, cp)
-    assert(TxTable.latestVersion(table).get == versBefore,
-      "replayed micro-batch must not commit a new version")
+    assert(TxTable.latestVersion(table).get == versBefore + 1L,
+      "the replayed micro-batch must not commit a new version; " +
+        "only the redelivery's batch does")
+    assert(TxTable.changes(spark, table, versBefore, versBefore + 1L)
+      .isEmpty, "the redelivered ids must be screened out")
     assert(ids(table) == expected,
       "replayed micro-batch must not duplicate or lose events")
+    assert(TxTable.read(spark, table).count() == expected.size.toLong)
   }
 }
